@@ -13,8 +13,8 @@ A from-scratch reimplementation of the *capabilities* of TonyRugg/ocr-machine
   ``recombine_split_results`` (``python_files/textract_agent.py:119-200``)
 
 Everything is expressed Spark-first: declarative DataFrame plans, a single
-Arrow-batched ``mapInPandas`` stage for the HTML parse (one Python round-trip
+Arrow-batched ``mapInArrow`` stage for the HTML parse (one Python round-trip
 on the hot path), built-in ``pyspark.sql.functions`` everywhere else.
 """
 
-__version__ = "0.1.0"
+__version__ = "0.3.0"

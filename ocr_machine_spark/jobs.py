@@ -11,17 +11,21 @@ Usage (cluster):
 
 The job is idempotent: re-running with the same --output resumes from the
 lineage table (only uncommitted buckets are processed — see
-ocr_machine_spark.plans.lineage). All compute is Arrow-batched; zero
-row-at-a-time Python (BASELINE.json execution constraint).
+ocr_machine_spark.plans.lineage). Each run needs a new --run-id: reuse one
+only to retry an attempt that never committed (an id with committed lineage
+is refused, since its data partition would be overwritten). All compute is
+Arrow-batched; zero row-at-a-time Python (BASELINE.json execution
+constraint).
 
 Sizing guidance at 10^12 rows / 100 TB html:
 * --buckets: O(10^5) so each bucket is a few hundred MB of output and a
   resume unit; bucket id = pmod(xxhash64(url), buckets) — stable across runs
-  and cluster sizes.
+  and cluster sizes. A bucket costs one lineage row, not a file: the data
+  is partitioned by run, one file per write task.
 * --partitions: 2-4× total executor cores; the salted repartition in
   extract_pages spreads mega-hosts across tasks.
-* spark.sql.files.maxPartitionBytes=256m keeps scan tasks bounded; AQE
-  coalesces the post-UDF writes.
+* spark.sql.files.maxPartitionBytes=256m keeps scan tasks, and so the data
+  files they write, bounded.
 * Arrow batches are capped by ROWS (spark.sql.execution.arrow.
   maxRecordsPerBatch, default 2048 here), not bytes: size it so
   records × your html size cap fits executor memory — e.g. 256 for

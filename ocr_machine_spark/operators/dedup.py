@@ -54,7 +54,9 @@ def jaccard_pairs(
     text: str = "text",
     max_docs: int | None = 100_000,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs (a < b, J ≥ threshold).
+    """Exact n-gram Jaccard similar pairs (a < b, J ≥ threshold), exact up to
+    64-bit shingle-hash collisions: the join key is ``xxhash64`` of the
+    shingle, so two distinct shingles that collide count as shared.
 
     Shape: shingle-explode → self-equi-join on shingle (sort-merge/shuffled
     hash on the shingle key — never a cross join) → per-pair intersection

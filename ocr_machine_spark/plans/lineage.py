@@ -10,29 +10,60 @@ structural:
   size;
 * each run processes only buckets absent from the **lineage table**
   (an anti-join on committed partition ids);
-* per bucket, data files are written first (dynamic partition overwrite, so a
-  re-run of a crashed bucket replaces its orphans), then the bucket's lineage
-  row is appended — the lineage row IS the commit marker;
-* readers go through ``read_extractions``, which inner-joins data partitions
-  against committed lineage, so half-written buckets are invisible.
+* each run first writes its data under its own ``run_id=<id>`` partition, one
+  file per scan task whatever the bucket count (dynamic partition overwrite,
+  so a retry of a crashed run under the same id replaces its orphans), then
+  appends one lineage row per processed bucket — the lineage row for
+  ``(bucket, run_id)`` IS the commit marker;
+* readers go through ``read_extractions``, which semi-joins data rows against
+  committed lineage on ``(bucket, run_id)``, so a crashed run's files are
+  invisible;
+* a run id that already has committed lineage rows is refused: its dynamic
+  overwrite would delete committed data.
 
-With an Iceberg catalog this maps 1:1 onto write-audit-publish: data + lineage
-append in one snapshot transaction; the parquet layout here is the sandbox
-stand-in. Lineage schema follows FIXTURES.md §4; stats are aggregated from the
-files actually on disk, so the bench numbers are auditable against lineage.
+With an Iceberg catalog this maps 1:1 onto write-audit-publish: the table
+carries the same ``bucket`` and ``run_id`` columns and ``overwritePartitions``
+replaces the run's partition in one snapshot; the parquet layout here is the
+stand-in when no catalog is configured. Lineage schema follows FIXTURES.md §4;
+stats are aggregated from the files actually on disk, so the bench numbers are
+auditable against lineage.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from ocr_machine_spark.operators.extraction import extract_pages, with_bucket
+from ocr_machine_spark.operators.extraction import EXTRACT_SCHEMA, extract_pages, with_bucket
 
 LINEAGE_DIR = "_lineage"
 DATA_DIR = "data"
+
+# explicit read schemas: no inference job per read, an empty data dir reads as
+# zero rows, and a run id like "001" stays a string instead of being inferred
+# as a partition int
+DATA_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields + [StructField("bucket", IntegerType()), StructField("run_id", StringType())]
+)
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("partition_id", LongType()),
+        StructField("run_id", StringType()),
+        StructField("rows_in", LongType()),
+        StructField("rows_out", LongType()),
+        StructField("pages_ok", LongType()),
+        StructField("pages_failed", LongType()),
+        StructField("bytes_html", LongType()),
+        StructField("chars_extracted", LongType()),
+        StructField("input_split", StringType()),
+        StructField("n_buckets", LongType()),
+        StructField("committed_snapshot", LongType()),
+    ]
+)
 
 
 def _lineage_path(out_dir: str) -> str:
@@ -68,15 +99,20 @@ def choose_sink(spark: SparkSession, table: str | None) -> str:
 
 
 def write_bucketed(df: DataFrame, spark: SparkSession, *, path: str, table: str | None = None) -> str:
-    """Write bucket-partitioned extraction data through the chosen sink and
-    return which sink was used.
+    """Write one run's extraction data (``bucket`` and ``run_id`` columns
+    included) through the chosen sink and return which sink was used.
 
-    Iceberg path: ``writeTo(table).overwritePartitions()`` — an atomic
-    snapshot commit that replaces exactly the buckets present in ``df``
-    (write-audit-publish; crashed-bucket re-runs replace their orphans).
-    Parquet path: dynamic partition overwrite — the same replace-by-bucket
-    semantics, minus the snapshot atomicity, which the lineage commit marker
-    restores at read time."""
+    The data is partitioned by run, not by bucket: each scan task writes one
+    file whatever the number of buckets it touches. Bucket-granular resume
+    lives in the lineage table, whose ``(bucket, run_id)`` row is the commit
+    marker readers semi-join on.
+
+    Iceberg path: ``writeTo(table).overwritePartitions()`` on a table that
+    carries ``run_id`` — an atomic snapshot commit that replaces exactly this
+    run's partition (write-audit-publish; a retry of a crashed run replaces
+    its orphans). Parquet path: dynamic partition overwrite of
+    ``run_id=<id>`` — the same replace-by-run semantics, minus the snapshot
+    atomicity, which the lineage commit marker restores at read time."""
     sink = choose_sink(spark, table)
     if sink == "iceberg":
         df.writeTo(table).overwritePartitions()
@@ -84,7 +120,7 @@ def write_bucketed(df: DataFrame, spark: SparkSession, *, path: str, table: str 
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
+            .partitionBy("run_id")
             .parquet(path)
         )
     return sink
@@ -96,20 +132,12 @@ def _read_lineage_or_none(spark: SparkSession, out_dir: str) -> DataFrame | None
     must propagate, not silently restart a 100-TB job from bucket zero."""
     from pyspark.errors import AnalysisException
 
-    path = _lineage_path(out_dir)
     try:
-        return spark.read.parquet(path)
+        return read_lineage(spark, out_dir)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
         raise
-
-
-def committed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
-    lin = _read_lineage_or_none(spark, out_dir)
-    if lin is None:
-        return []
-    return sorted(r[0] for r in lin.select("partition_id").distinct().collect())
 
 
 def run_extraction(
@@ -126,8 +154,9 @@ def run_extraction(
 ) -> dict:
     """Extract all not-yet-committed buckets of ``pages`` into ``out_dir``.
 
-    ``max_buckets_this_run`` exists for failure-injection tests (process only
-    k buckets, "crash", resume). Returns run stats.
+    ``run_id`` must be new, unless it retries an attempt that never committed
+    a lineage row. ``max_buckets_this_run`` exists for failure-injection tests
+    (process only k buckets, "crash", resume). Returns run stats.
 
     EVERY processed bucket gets a lineage row, including empty ones (rows 0)
     — "committed" means processed, not non-empty. Otherwise sparse inputs
@@ -137,16 +166,24 @@ def run_extraction(
     lin = _read_lineage_or_none(spark, out_dir)
     done: list[int] = []
     if lin is not None:
+        committed = lin.select("partition_id", "n_buckets", "run_id").distinct().collect()
         # resume guard: bucket ids only compose within ONE bucket space —
         # resuming 16-bucket lineage with --buckets 256 would silently skip
         # never-extracted rows and duplicate committed ones
-        prev = [r[0] for r in lin.select("n_buckets").distinct().collect()]
+        prev = sorted({r["n_buckets"] for r in committed})
         if prev and prev != [n_buckets]:
             raise ValueError(
                 f"lineage at {out_dir} was committed with n_buckets={prev}; "
                 f"resume must use the same value (got {n_buckets})"
             )
-        done = sorted(r[0] for r in lin.select("partition_id").distinct().collect())
+        # reuse guard: the data write replaces the whole run_id=<id>
+        # partition, which would delete buckets this id already committed
+        if any(r["run_id"] == run_id for r in committed):
+            raise ValueError(
+                f"run_id {run_id!r} already has committed lineage at {out_dir}; "
+                "use a new run id (reuse only retries an attempt that never committed)"
+            )
+        done = sorted({r["partition_id"] for r in committed})
     bucketed = with_bucket(pages, n_buckets)
     todo = bucketed.filter(~F.col("bucket").isin(done)) if done else bucketed
 
@@ -156,26 +193,24 @@ def run_extraction(
         todo = todo.filter(F.col("bucket").isin(processed))
 
     extracted = extract_pages(todo, partitions=partitions)
-    out = with_bucket(extracted, n_buckets)  # same deterministic bucket fn
+    # same deterministic bucket fn; the run id is the data partition
+    out = with_bucket(extracted, n_buckets).withColumn("run_id", F.lit(run_id))
 
-    # 1) data first — bucket-replacing write (Iceberg snapshot commit when a
+    # 1) data first — run-replacing write (Iceberg snapshot commit when a
     # catalog is configured; parquet dynamic overwrite otherwise), so a
-    # re-run of a crashed bucket replaces its orphans
+    # retry of a crashed run replaces its orphans
     sink = write_bucketed(out, spark, path=_data_path(out_dir), table=table)
 
-    # 2) lineage from what's actually committed (auditable), written last.
+    # 2) lineage from what's actually written (auditable), written last.
     # Read back through the SINK that was written: the Iceberg table when a
-    # catalog took the data, else the parquet dir — with an explicit schema,
-    # so an empty first run (only _SUCCESS on disk) reads as zero rows
-    # instead of failing schema inference.
+    # catalog took the data, else this run's parquet partition.
     if sink == "iceberg":
         written = spark.table(table)
         snapshot = _current_snapshot(spark, table)
     else:
-        written = spark.read.schema(out.schema).parquet(_data_path(out_dir))
+        written = spark.read.schema(DATA_SCHEMA).parquet(_data_path(out_dir))
         snapshot = -1  # parquet sand-box stand-in has no snapshot ids
-    written = written.filter(F.col("bucket").isin(processed))
-    agg_rows = written.groupBy("bucket").agg(
+    agg_rows = written.filter(F.col("run_id") == run_id).groupBy("bucket").agg(
         F.count("*").alias("rows_out"),
         F.sum(F.col("ok").cast("long")).alias("pages_ok"),
         F.sum((~F.col("ok")).cast("long")).alias("pages_failed"),
@@ -187,41 +222,25 @@ def run_extraction(
     # EXPOSE a drop/expand the day a stage introduces one, so they must not
     # share one expression
     in_counts = {r[0]: r[1] for r in todo.groupBy("bucket").count().collect()}
-    by_bucket = {r["bucket"]: r for r in agg_rows}
-    lineage_rows = []
-    for b in processed:
-        r = by_bucket.get(b)
-        lineage_rows.append(
-            (
-                b,
-                run_id,
-                int(in_counts.get(b, 0)),
-                int(r["rows_out"]) if r else 0,
-                int(r["pages_ok"] or 0) if r else 0,
-                int(r["pages_failed"] or 0) if r else 0,
-                int(r["bytes_html"] or 0) if r else 0,
-                int(r["chars_extracted"] or 0) if r else 0,
-                input_split,
-                n_buckets,
-                snapshot,
-            )
-        )
-    lineage = spark.createDataFrame(
-        lineage_rows,
-        "partition_id long, run_id string, rows_in long, rows_out long, "
-        "pages_ok long, pages_failed long, bytes_html long, "
-        "chars_extracted long, input_split string, n_buckets long, "
-        "committed_snapshot long",
-    )
+    by_bucket = {r["bucket"]: r.asDict() for r in agg_rows}
+    n = len(processed)
+    cols = {"partition_id": processed, "run_id": [run_id] * n, "rows_in": [in_counts.get(b, 0) for b in processed]}
+    for c in ("rows_out", "pages_ok", "pages_failed", "bytes_html", "chars_extracted"):
+        cols[c] = [by_bucket.get(b, {}).get(c) or 0 for b in processed]
+    cols.update(input_split=[input_split] * n, n_buckets=[n_buckets] * n, committed_snapshot=[snapshot] * n)
+    # from an Arrow table, not a list of rows: the rows go to the JVM as one
+    # Arrow stream, with no Python-worker job to reserialize them; ≤ n_buckets
+    # rows make one lineage file per run
+    lineage = spark.createDataFrame(pa.table(cols), LINEAGE_SCHEMA).coalesce(1)
     lineage.write.mode("append").parquet(_lineage_path(out_dir))
 
     return {
         "run_id": run_id,
-        "buckets_committed": len(lineage_rows),
-        "rows": sum(r[3] for r in lineage_rows),
-        "pages_ok": sum(r[4] for r in lineage_rows),
-        "pages_failed": sum(r[5] for r in lineage_rows),
-        "bytes_html": sum(r[6] for r in lineage_rows),
+        "buckets_committed": n,
+        "rows": sum(cols["rows_out"]),
+        "pages_ok": sum(cols["pages_ok"]),
+        "pages_failed": sum(cols["pages_failed"]),
+        "bytes_html": sum(cols["bytes_html"]),
     }
 
 
@@ -238,18 +257,18 @@ def _current_snapshot(spark: SparkSession, table: str) -> int:
 
 
 def read_extractions(spark: SparkSession, out_dir: str, *, table: str | None = None) -> DataFrame:
-    """Committed rows only: data ⋉ lineage on partition id (semi-join keeps
-    half-written buckets invisible, exactly-once semantics for readers).
-    Pass the same ``table`` the writer used when an Iceberg catalog took the
-    data — the parquet dir under ``out_dir`` only exists for the parquet
-    sink."""
+    """Committed rows only: data ⋉ lineage on ``(bucket, run_id)`` (the
+    semi-join keeps a crashed run's files invisible, exactly-once semantics
+    for readers). Pass the same ``table`` the writer used when an Iceberg
+    catalog took the data — the parquet dir under ``out_dir`` only exists for
+    the parquet sink."""
     if table is not None and choose_sink(spark, table) == "iceberg":
         data = spark.table(table)
     else:
-        data = spark.read.parquet(_data_path(out_dir))
-    lin = spark.read.parquet(_lineage_path(out_dir)).select(F.col("partition_id").alias("bucket")).distinct()
-    return data.join(F.broadcast(lin), "bucket", "left_semi")
+        data = spark.read.schema(DATA_SCHEMA).parquet(_data_path(out_dir))
+    lin = read_lineage(spark, out_dir).select(F.col("partition_id").alias("bucket"), "run_id").distinct()
+    return data.join(F.broadcast(lin), ["bucket", "run_id"], "left_semi")
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_lineage_path(out_dir))
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_path(out_dir))

@@ -161,6 +161,72 @@ def test_lineage_empty_input_run(spark, tmp_path):
     assert s["buckets_committed"] == 8 and s["rows"] == 0 and s["pages_ok"] == 0
 
 
+def _data_files(out: str, run_id: str) -> list[str]:
+    import glob
+    import os
+
+    return glob.glob(os.path.join(out, "data", f"run_id={run_id}", "**", "*.parquet"), recursive=True)
+
+
+def test_lineage_writes_one_file_per_scan_task(spark, pages, tmp_path):
+    """Data is partitioned by run, not by bucket: a run over a P-partition
+    input writes at most P data files, whatever the bucket count."""
+    out = str(tmp_path / "files")
+    p = pages.rdd.getNumPartitions()
+    run_extraction(spark, pages, out, run_id="r1", n_buckets=64, max_buckets_this_run=40)
+    run_extraction(spark, pages, out, run_id="r2", n_buckets=64)
+    assert 0 < len(_data_files(out, "r1")) <= p
+    assert 0 < len(_data_files(out, "r2")) <= p
+    assert read_extractions(spark, out).count() == N
+
+
+def test_lineage_refuses_reused_run_id(spark, pages, tmp_path):
+    """A run id with committed lineage is refused before anything is
+    written: its run-partition overwrite would delete committed data."""
+    out = str(tmp_path / "reuse")
+    run_extraction(spark, pages, out, run_id="r1", n_buckets=16, max_buckets_this_run=5)
+    before = sorted(r["url"] for r in read_extractions(spark, out).select("url").collect())
+    with pytest.raises(ValueError, match="run_id 'r1'"):
+        run_extraction(spark, pages, out, run_id="r1", n_buckets=16)
+    after = sorted(r["url"] for r in read_extractions(spark, out).select("url").collect())
+    assert 0 < len(before) < N and after == before
+    assert read_lineage(spark, out).count() == 5
+
+
+def test_lineage_crashed_run_orphans_invisible(spark, pages, tmp_path):
+    """A crash between the data write and the lineage append leaves files
+    with no commit marker: readers never see them, and a resume under a new
+    run id commits every url exactly once."""
+    from ocr_machine_spark.operators.extraction import with_bucket
+    from ocr_machine_spark.plans.lineage import write_bucketed
+
+    out = str(tmp_path / "crash")
+    run_extraction(spark, pages, out, run_id="r1", n_buckets=16, max_buckets_this_run=5)
+    mid = read_extractions(spark, out).count()
+    # the crashed attempt wrote every bucket, committed ones included
+    orphans = with_bucket(extract_pages(pages), 16).withColumn("run_id", F.lit("crashed"))
+    write_bucketed(orphans, spark, path=str(tmp_path / "crash" / "data"))
+    assert _data_files(out, "crashed")
+    assert read_extractions(spark, out).count() == mid
+    s2 = run_extraction(spark, pages, out, run_id="r2", n_buckets=16)
+    assert s2["buckets_committed"] == 11
+    done = read_extractions(spark, out)
+    assert done.count() == N
+    assert done.select("url").distinct().count() == N
+    assert done.filter(F.col("run_id") == "crashed").count() == 0
+
+
+def test_lineage_numeric_run_ids_round_trip(spark, pages, tmp_path):
+    """Run ids that look like numbers stay strings: "001" must not be
+    inferred as the partition int 1 and lose its commit marker."""
+    out = str(tmp_path / "numeric")
+    run_extraction(spark, pages, out, run_id="001", n_buckets=16, max_buckets_this_run=5)
+    run_extraction(spark, pages, out, run_id="2", n_buckets=16)
+    got = read_extractions(spark, out)
+    assert got.count() == N
+    assert sorted(r[0] for r in got.select("run_id").distinct().collect()) == ["001", "2"]
+
+
 def test_repartition_salted_spreads_duplicate_keys(spark):
     """Review fix: the salt must vary WITHIN a key — a key-derived salt is a
     no-op (it induces the key's own partition classes), so 1000 rows sharing
