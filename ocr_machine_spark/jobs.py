@@ -262,6 +262,8 @@ def main(argv: list[str] | None = None) -> None:
         )
 
     if args.job == "cdx":
+        from pyspark.sql import functions as F
+
         from ocr_machine_spark.sources.warc import read_warc_cdx
 
         # the CDX convention: index sorted by url so consumers binary-search
@@ -269,12 +271,10 @@ def main(argv: list[str] | None = None) -> None:
         # rows (tiny next to the archives they describe)
         cdx = read_warc_cdx(spark, args.input).sort("url")
         cdx.write.mode("overwrite").parquet(args.output)
-        back = spark.read.parquet(args.output)
-        stats = {
-            "run_id": args.run_id,
-            "n_records": back.count(),
-            "n_files": back.select("file").distinct().count(),
-        }
+        counts = spark.read.parquet(args.output).agg(
+            F.count("*").alias("n_records"), F.countDistinct("file").alias("n_files")
+        ).first()
+        stats = {"run_id": args.run_id, **counts.asDict()}
         print(json.dumps(stats))
         spark.stop()
         return

@@ -18,135 +18,131 @@ sequence (``python_files/strikethrough_agent.py:100-127`` gates feeding
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_machine_spark.functions import norm_text
-from ocr_machine_spark.operators.textstats import gopher_filter, line_dedup, span_dedup
+from ocr_machine_spark.operators.dedup import dedup_clusters_star, minhash_dedup_pairs
+from ocr_machine_spark.operators.textstats import (
+    benchmark_contamination,
+    gopher_filter,
+    line_dedup,
+    span_dedup,
+)
 
 
-def _rewrite_deduped_spans(docs: DataFrame) -> DataFrame:
-    """Replace ``text`` with its exact-substring-deduplicated rewrite
-    (Lee et al. 2022 — later corpus occurrences of any ≥8-word run are
-    excised) and attach ``n_span_words``/``n_span_kept``. preserve_case:
-    matching is case-insensitive but the curated text keeps the original
-    casing (whitespace collapses — the match tokenization). Left join:
-    documents with empty normalized text (no span_dedup row) flow on with
-    empty text so their audit row survives. Pure function of the input."""
-    sd = span_dedup(docs, preserve_case=True).select(
-        "doc_id",
-        F.col("n_words").alias("n_span_words"),
-        F.col("n_kept").alias("n_span_kept"),
-        "text_dedup",
-    )
+# MinHash-LSH Jaccard threshold of the fuzzy-dedup stage (``dedup_near``)
+NEAR_THRESHOLD = 0.8
+
+
+def _rewrite(docs: DataFrame, dedup_frame: DataFrame, n_in: str, n_kept: str) -> DataFrame:
+    """Replace ``text`` with a dedup operator's rewrite and attach its
+    counts as ``n_in``/``n_kept``. ``dedup_frame`` has the shape
+    ``line_dedup`` and ``span_dedup`` both return — (doc_id, count in,
+    n_kept, text_dedup). Left join: a document with no dedup row (every
+    line a later duplicate, or empty normalized text) flows on with empty
+    text and zero counts so its audit row survives. Pure function of the
+    input rows."""
+    d = dedup_frame.toDF("doc_id", n_in, n_kept, "text_dedup")
     return (
         docs.drop("text")
-        .join(sd, "doc_id", "left")
+        .join(d, "doc_id", "left")
         .withColumn("text", F.coalesce("text_dedup", F.lit("")))
-        .withColumn("n_span_words", F.coalesce("n_span_words", F.lit(0)))
-        .withColumn("n_span_kept", F.coalesce("n_span_kept", F.lit(0)))
+        .withColumn(n_in, F.coalesce(n_in, F.lit(0)))
+        .withColumn(n_kept, F.coalesce(n_kept, F.lit(0)))
         .drop("text_dedup")
     )
 
 
-def _rewrite_deduped_lines(docs: DataFrame) -> DataFrame:
-    """Replace ``text`` with its corpus-line-deduplicated rewrite and attach
-    ``n_lines``/``n_lines_kept``. Left join: a document whose every line was
-    a later duplicate (no line_dedup row) flows on with empty text so its
-    audit row survives. Pure function of the input rows — run_curation
-    relies on re-applying it producing byte-identical text."""
-    ld = line_dedup(docs).select(
-        "doc_id", "n_lines", F.col("n_kept").alias("n_lines_kept"), "text_dedup"
-    )
-    return (
-        docs.drop("text")
-        .join(ld, "doc_id", "left")
-        .withColumn("text", F.coalesce("text_dedup", F.lit("")))
-        .withColumn("n_lines", F.coalesce("n_lines", F.lit(0)))
-        .withColumn("n_lines_kept", F.coalesce("n_lines_kept", F.lit(0)))
-        .drop("text_dedup")
-    )
-
-
-def curate_documents(
+def run_curation(
+    spark: SparkSession,
     docs: DataFrame,
+    out_dir: str,
     *,
+    run_id: str,
     dedup_lines: bool = False,
     dedup_spans: bool = False,
     dedup_near: bool = False,
-    near_threshold: float = 0.8,
     bench: DataFrame | None = None,
-    decon_k: int = 8,
-    rewrites_applied: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """→ (curated docs frame, per-doc decision frame).
+) -> dict:
+    """Write the per-doc decision audit table and the curated docs under
+    ``out_dir``; → run stats (input/kept/survivor counts and the
+    drop-reason histogram).
 
-    The decision frame carries every document's audit row: the Gopher
-    ``reasons`` string, its content fingerprint, and ``survivor`` (kept by
-    quality AND the dedup keeper for its fingerprint). The curated frame is
-    the input rows restricted to survivors, with the fingerprint column
-    attached — the shape a training-data builder partitions and samples
-    from. Shuffles: one on doc_id (decision join), one on fp (survivor
-    min) — both keyed, scale-safe.
+    Every document gets an audit row in ``decisions``: the Gopher
+    ``reasons`` string, its content fingerprint ``fp``, and ``survivor``
+    (kept by quality AND the dedup keeper — min doc_id — for its
+    fingerprint). ``curated`` is the input rows restricted to survivors,
+    with ``fp`` attached — the shape a training-data builder partitions
+    and samples from. Shuffles: one on doc_id (decision join), one on fp
+    (survivor min) — both keyed, scale-safe.
 
     ``dedup_lines=True`` prepends CCNet-ordered line deduplication (dedup
     BEFORE filtering, Wenzek et al. §3): every later copy of a line already
     seen anywhere in the corpus is removed, the document's text rewritten
     from its surviving lines, and the quality ladder then judges the
     CLEANED text — so boilerplate chrome can no longer carry a page past
-    the repetition gates. The decision frame gains ``n_lines``/
-    ``n_lines_kept``; documents whose every line was a duplicate flow on
-    with empty text and fall to the quality gate (their audit row keeps
-    them visible).
+    the repetition gates. The audit gains ``n_lines``/``n_lines_kept``;
+    documents whose every line was a duplicate flow on with empty text and
+    fall to the quality gate (their audit row keeps them visible).
+
+    ``dedup_spans=True`` then excises exact duplicated substrings (Lee et
+    al. 2022 — later corpus occurrences of any ≥8-word run), after line
+    dedup by design: lines kill whole-line boilerplate cheaply, spans then
+    excise the remaining long duplicated RUNS (Lee et al. order: substring
+    dedup over the cleaned corpus). Matching is case-insensitive but the
+    curated text keeps its original casing (whitespace collapses — the
+    match tokenization). The audit gains ``n_span_words``/``n_span_kept``.
 
     ``dedup_near=True`` appends FUZZY dedup after the exact survivor
-    stage: MinHash-LSH candidate pairs at ``near_threshold`` Jaccard over
+    stage: MinHash-LSH candidate pairs at ``NEAR_THRESHOLD`` Jaccard over
     the exact survivors, resolved to clusters by the large-star/small-star
     engine, one survivor (min doc_id) per cluster. Exact dedup stays in
     front — identical docs are guaranteed LSH candidates only when they
     have ≥k words, so tiny exact dupes need the fp stage; near dedup then
     prunes the boilerplate-variant copies exact hashing can never see.
-    The decision frame gains ``near_rep`` (NULL for docs that never
-    reached the near stage). Scale shape: banded LSH (no cross join) over
-    the post-quality survivor subset only, O(log n) CC rounds.
+    The audit gains ``near_rep`` (NULL for docs that never reached the
+    near stage). Scale shape: banded LSH (no cross join) over the
+    post-quality survivor subset only, O(log n) CC rounds.
 
     ``bench`` (a frame with a ``text`` column) switches on train/test
     DECONTAMINATION (GPT-3 appendix-C style, the published pre-training
-    hygiene pass): any document sharing a word ``decon_k``-gram with the
-    benchmark is dropped regardless of quality, with ``contaminated`` in
-    its reasons audit string — eval prompts must never reach training
-    data, however clean they look. The benchmark side is broadcast
+    hygiene pass): any document sharing a word 8-gram with the benchmark
+    is dropped regardless of quality, with ``contaminated`` in its reasons
+    audit string — eval prompts must never reach training data, however
+    clean they look. The benchmark side is broadcast
     (operators.textstats.benchmark_contamination), so the pass adds zero
     shuffle of corpus text.
-    """
-    if not rewrites_applied:
-        # materialize after EACH rewrite stage (r7, guide §5): the decision
-        # plan references ``docs`` from many branches (gopher gate,
-        # fingerprints, near-dup candidate build, survivor join, audit
-        # joins), and span_dedup itself references its input three times
-        # (word explode + gram explode feeding both the witness agg and the
-        # join-back) — without barriers the upstream rewrite chain
-        # re-executes per reference (measured: the line and gram explode
-        # stages each ran 3× per curation). Real pipelines write these
-        # intermediates (the cleaned corpus IS a dataset); in-job the
-        # executor-local checkpoint is the moral equivalent.
-        # ``run_curation`` pre-applies the rewrites itself
-        # (rewrites_applied=True) so its curated write shares the same
-        # materialization instead of re-deriving the chain.
-        if dedup_lines:
-            docs = _rewrite_deduped_lines(docs).localCheckpoint(eager=True)
-        if dedup_spans:
-            # after line dedup by design: lines kill whole-line boilerplate
-            # cheaply, spans then excise the remaining long duplicated RUNS
-            # (Lee et al. order: substring dedup over the cleaned corpus)
-            docs = _rewrite_deduped_spans(docs).localCheckpoint(eager=True)
+
+    Dataflow: only the DECISION frame is computed from the live plan; the
+    curated table and the stats both derive from the decisions parquet read
+    back after the write, so the three outputs can never disagree. Every
+    output is a pure deterministic function of the input rows: re-running
+    produces byte-identical output, so the job is idempotent under
+    overwrite."""
+    # materialize after EACH rewrite stage: the decision plan references
+    # ``docs`` from many branches (gopher gate, fingerprints, near-dup
+    # candidate build, curated write), and span_dedup itself references its
+    # input three times (word explode + gram explode feeding both the
+    # witness agg and the join-back) — without barriers the upstream
+    # rewrite chain re-executes per reference (measured: the line and gram
+    # explode stages each ran 3× per curation). Real pipelines write these
+    # intermediates (the cleaned corpus IS a dataset); in-job the
+    # executor-local checkpoint is the moral equivalent.
+    counts: list[str] = []
+    if dedup_lines:
+        ld = line_dedup(docs)
+        docs = _rewrite(docs, ld, "n_lines", "n_lines_kept").localCheckpoint(eager=True)
+        counts += ["n_lines", "n_lines_kept"]
+    if dedup_spans:
+        sd = span_dedup(docs, preserve_case=True)
+        docs = _rewrite(docs, sd, "n_span_words", "n_span_kept").localCheckpoint(eager=True)
+        counts += ["n_span_words", "n_span_kept"]
     decision = gopher_filter(docs)
     if bench is not None:
-        from ocr_machine_spark.operators.textstats import benchmark_contamination
-
-        cont = benchmark_contamination(docs, bench, k=decon_k).select(
-            "doc_id", "contaminated"
-        )
+        cont = benchmark_contamination(docs, bench).select("doc_id", "contaminated")
         decision = (
             decision.join(cont, "doc_id")
             .withColumn(
@@ -161,9 +157,9 @@ def curate_documents(
             )
             .withColumn("keep", F.col("keep") & ~F.col("contaminated"))
         )
+    # the rewrite counts ride the fingerprint projection — no extra join
     fp = F.md5(norm_text(F.coalesce(F.col("text"), F.lit(""))))
-    fps = docs.select("doc_id", fp.alias("fp"))
-    d = decision.join(fps, "doc_id")
+    d = decision.join(docs.select("doc_id", fp.alias("fp"), *counts), "doc_id")
     keepers = (
         d.filter(F.col("keep"))
         .groupBy("fp")
@@ -172,14 +168,10 @@ def curate_documents(
     d = d.join(keepers, "fp", "left").withColumn(
         "survivor", F.col("keep") & (F.col("doc_id") == F.col("keeper_doc_id"))
     ).drop("keeper_doc_id")
+    audit_cols = ["doc_id", "n_words", "keep", "reasons", "fp", "survivor"]
     if dedup_near:
-        from ocr_machine_spark.operators.dedup import (
-            dedup_clusters_star,
-            minhash_dedup_pairs,
-        )
-
         kept = docs.join(d.filter(F.col("survivor")).select("doc_id"), "doc_id")
-        pairs = minhash_dedup_pairs(kept, threshold=near_threshold)
+        pairs = minhash_dedup_pairs(kept, threshold=NEAR_THRESHOLD)
         clusters = dedup_clusters_star(kept.select("doc_id"), pairs).select(
             "doc_id",
             F.col("rep").alias("near_rep"),
@@ -188,103 +180,45 @@ def curate_documents(
         d = d.join(clusters, "doc_id", "left").withColumn(
             "survivor", F.col("survivor") & F.coalesce(F.col("near_keep"), F.lit(True))
         ).drop("near_keep")
-    curated = docs.join(
-        d.filter(F.col("survivor")).select("doc_id", "fp"), "doc_id"
-    )
-    audit_cols = ["doc_id", "n_words", "keep", "reasons", "fp", "survivor"]
-    if dedup_near:
         audit_cols.append("near_rep")
     if bench is not None:
         audit_cols.append("contaminated")
-    if dedup_lines:
-        d = d.join(docs.select("doc_id", "n_lines", "n_lines_kept"), "doc_id")
-        audit_cols += ["n_lines", "n_lines_kept"]
-    if dedup_spans:
-        d = d.join(docs.select("doc_id", "n_span_words", "n_span_kept"), "doc_id")
-        audit_cols += ["n_span_words", "n_span_kept"]
-    return curated, d.select(*audit_cols)
-
-
-def run_curation(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    *,
-    run_id: str,
-    dedup_lines: bool = False,
-    dedup_spans: bool = False,
-    dedup_near: bool = False,
-    bench: DataFrame | None = None,
-) -> dict:
-    """Write curated docs + decision audit table under ``out_dir``;
-    → run stats (input/kept/survivor counts and the drop-reason histogram).
-
-    Dataflow: only the DECISION frame is computed from the live plan; the
-    curated table and the stats both derive from the decisions parquet read
-    back after the write, so the three outputs can never disagree."""
-    # apply the text rewrites HERE, once, and share the materialized cleaned
-    # corpus between the decision plan and the curated write (r7): the old
-    # flow re-applied the pure rewrite chain for the curated table, paying
-    # the explode/groupBy/join passes a second time (see curate_documents)
-    if dedup_lines:
-        docs = _rewrite_deduped_lines(docs).localCheckpoint(eager=True)
-    if dedup_spans:
-        docs = _rewrite_deduped_spans(docs).localCheckpoint(eager=True)
-    _, decision = curate_documents(
-        docs,
-        dedup_lines=dedup_lines,
-        dedup_spans=dedup_spans,
-        dedup_near=dedup_near,
-        bench=bench,
-        rewrites_applied=True,
-    )
-    decision.write.mode("overwrite").parquet(f"{out_dir}/decisions")
+    d.select(*audit_cols, *counts).write.mode("overwrite").parquet(f"{out_dir}/decisions")
     # read the audit table back and derive BOTH outputs from it — one
     # computation of the (nondeterminism-free) plan, stats match the files
     dec = spark.read.parquet(f"{out_dir}/decisions")
     docs.join(dec.filter(F.col("survivor")).select("doc_id", "fp"), "doc_id").write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/curated")
-    counts = dec.agg(
-        F.count("*").alias("docs_in"),
-        F.sum(F.col("keep").cast("long")).alias("docs_quality_kept"),
-        F.sum(F.col("survivor").cast("long")).alias("docs_curated"),
-    ).collect()[0]
-    reasons = {
-        r["reason"]: r["n"]
-        for r in dec.filter(~F.col("keep"))
-        .select(F.explode(F.split("reasons", ",")).alias("reason"))
-        .groupBy("reason")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    stats = {
-        "run_id": run_id,
-        "docs_in": counts["docs_in"],
-        "docs_quality_kept": counts["docs_quality_kept"],
-        "docs_curated": counts["docs_curated"],
-        "drop_reasons": dict(sorted(reasons.items())),
-    }
+    # one stats action: per (keep, reasons) group, the doc count and every
+    # summed stat; the driver folds the totals and the reason histogram
+    # from those few rows
+    sums = {"docs_curated": F.col("survivor").cast("long")}
     if dedup_lines:
-        lc = dec.agg(
-            F.sum("n_lines").alias("li"), F.sum("n_lines_kept").alias("lk")
-        ).collect()[0]
-        stats["lines_in"] = int(lc["li"] or 0)
-        stats["lines_kept"] = int(lc["lk"] or 0)
+        sums.update(lines_in=F.col("n_lines"), lines_kept=F.col("n_lines_kept"))
     if dedup_near:
-        stats["docs_near_dropped"] = int(
-            dec.filter(
-                F.col("near_rep").isNotNull() & (F.col("near_rep") != F.col("doc_id"))
-            ).count()
-        )
+        near_dropped = F.col("near_rep").isNotNull() & (F.col("near_rep") != F.col("doc_id"))
+        sums["docs_near_dropped"] = near_dropped.cast("long")
     if dedup_spans:
-        sp = dec.agg(
-            F.sum("n_span_words").alias("wi"), F.sum("n_span_kept").alias("wk")
-        ).collect()[0]
-        stats["span_words_in"] = int(sp["wi"] or 0)
-        stats["span_words_kept"] = int(sp["wk"] or 0)
+        sums.update(span_words_in=F.col("n_span_words"), span_words_kept=F.col("n_span_kept"))
     if bench is not None:
-        stats["docs_contaminated"] = int(
-            dec.agg(F.sum(F.col("contaminated").cast("long"))).collect()[0][0] or 0
-        )
-    return stats
+        sums["docs_contaminated"] = F.col("contaminated").cast("long")
+    groups = (
+        dec.groupBy("keep", "reasons")
+        .agg(F.count("*").alias("n"), *(F.sum(c).alias(k) for k, c in sums.items()))
+        .collect()
+    )
+    totals = {k: sum(int(g[k] or 0) for g in groups) for k in sums}
+    reasons: Counter[str] = Counter()
+    for g in groups:
+        if not g["keep"]:
+            for r in g["reasons"].split(","):
+                reasons[r] += g["n"]
+    return {
+        "run_id": run_id,
+        "docs_in": sum(g["n"] for g in groups),
+        "docs_quality_kept": sum(g["n"] for g in groups if g["keep"]),
+        "docs_curated": totals.pop("docs_curated"),
+        "drop_reasons": dict(sorted(reasons.items())),
+        **totals,
+    }

@@ -154,23 +154,21 @@ def run_frontier(
         partitions=partitions,
     ).write.mode("overwrite").parquet(f"{out_dir}/frontier")
     back = spark.read.parquet(f"{out_dir}/frontier")
-    agg = back.agg(
-        F.count("*").alias("n_urls"),
-        F.sum(F.col("allowed").cast("long")).alias("n_allowed"),
-        F.sum((~F.col("allowed")).cast("long")).alias("n_blocked"),
-        F.sum(F.col("crawl_delay_ms").isNotNull().cast("long")).alias("n_with_delay"),
-        F.sum(F.col("priority_e9").isNotNull().cast("long")).alias("n_ranked"),
-    ).first()
-    fresh = {
-        f"fresh_{r['freshness']}": r["n"]
-        for r in back.groupBy("freshness").agg(F.count("*").alias("n")).collect()
+    # one stats action: the per-freshness groups carry every count, the
+    # driver sums the totals from those few rows
+    sums = {
+        "n_allowed": F.col("allowed").cast("long"),
+        "n_blocked": (~F.col("allowed")).cast("long"),
+        "n_with_delay": F.col("crawl_delay_ms").isNotNull().cast("long"),
+        "n_ranked": F.col("priority_e9").isNotNull().cast("long"),
     }
+    groups = (
+        back.groupBy("freshness")
+        .agg(F.count("*").alias("n_urls"), *(F.sum(c).alias(k) for k, c in sums.items()))
+        .collect()
+    )
     return {
         "run_id": run_id,
-        "n_urls": int(agg["n_urls"]),
-        "n_allowed": int(agg["n_allowed"] or 0),
-        "n_blocked": int(agg["n_blocked"] or 0),
-        "n_with_delay": int(agg["n_with_delay"] or 0),
-        "n_ranked": int(agg["n_ranked"] or 0),
-        **dict(sorted(fresh.items())),
+        **{k: sum(int(g[k] or 0) for g in groups) for k in ["n_urls", *sums]},
+        **dict(sorted((f"fresh_{g['freshness']}", g["n_urls"]) for g in groups)),
     }

@@ -433,3 +433,103 @@ def test_curation_dedup_near(spark, tmp_path):
     assert {k: v for k, v in s2.items() if k != "run_id"} == {
         k: v for k, v in s1.items() if k != "run_id"
     }
+
+
+def test_curation_empty_input_counts_zero(spark, tmp_path):
+    """An empty documents frame with every stage on yields zero for every
+    count (not NULL from a sum over no rows) and an empty histogram."""
+    from ocr_machine_spark.plans.curate import run_curation
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    bench = spark.createDataFrame([("alpha beta gamma delta epsilon zeta eta theta",)], "text string")
+    stats = run_curation(
+        spark, docs, str(tmp_path / "empty"), run_id="e",
+        dedup_lines=True, dedup_spans=True, dedup_near=True, bench=bench,
+    )
+    assert stats == {
+        "run_id": "e",
+        "docs_in": 0,
+        "docs_quality_kept": 0,
+        "docs_curated": 0,
+        "drop_reasons": {},
+        "lines_in": 0,
+        "lines_kept": 0,
+        "docs_near_dropped": 0,
+        "span_words_in": 0,
+        "span_words_kept": 0,
+        "docs_contaminated": 0,
+    }
+
+
+def test_curation_stats_reconcile_with_decisions_all_flags(spark, tmp_path):
+    """Every stage on at once (line, span and near dedup plus
+    decontamination): each stat equals the same value recomputed from the
+    decisions parquet by one aggregation per stat (the reference here),
+    and every stage actually fired on the fixture."""
+    from ocr_machine_spark.plans.curate import run_curation
+
+    def filler(i):  # 30 distinct 8-char words: inside the Gopher bounds
+        return " ".join(f"d{i:02d}w{j:03d}x" for j in range(30))
+
+    run = "Please Subscribe To Our Weekly Newsletter For More Updates"  # 9 words
+    leak = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(i, f"{filler(i)} {run}\nshared footer line") for i in range(1, 7)]
+    rows += [
+        (7, rows[1][1]),  # exact copy of doc 2
+        (8, "tiny text here"),  # too few words
+        (9, f"{filler(9)} {leak}"),  # clean quality, leaked
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    bench = spark.createDataFrame([(leak,)], "text string")
+    out = str(tmp_path / "all")
+    stats = run_curation(
+        spark, docs, out, run_id="a",
+        dedup_lines=True, dedup_spans=True, dedup_near=True, bench=bench,
+    )
+
+    dec = spark.read.parquet(f"{out}/decisions")
+    counts = dec.agg(
+        F.count("*").alias("docs_in"),
+        F.sum(F.col("keep").cast("long")).alias("docs_quality_kept"),
+        F.sum(F.col("survivor").cast("long")).alias("docs_curated"),
+    ).collect()[0]
+    reasons = {
+        r["reason"]: r["n"]
+        for r in dec.filter(~F.col("keep"))
+        .select(F.explode(F.split("reasons", ",")).alias("reason"))
+        .groupBy("reason")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    lc = dec.agg(F.sum("n_lines"), F.sum("n_lines_kept")).collect()[0]
+    sp = dec.agg(F.sum("n_span_words"), F.sum("n_span_kept")).collect()[0]
+    near = dec.filter(
+        F.col("near_rep").isNotNull() & (F.col("near_rep") != F.col("doc_id"))
+    ).count()
+    cont = dec.agg(F.sum(F.col("contaminated").cast("long"))).collect()[0][0]
+    assert stats == {
+        "run_id": "a",
+        "docs_in": counts["docs_in"],
+        "docs_quality_kept": counts["docs_quality_kept"],
+        "docs_curated": counts["docs_curated"],
+        "drop_reasons": dict(sorted(reasons.items())),
+        "lines_in": lc[0],
+        "lines_kept": lc[1],
+        "docs_near_dropped": near,
+        "span_words_in": sp[0],
+        "span_words_kept": sp[1],
+        "docs_contaminated": cont,
+    }
+    assert list(stats) == [
+        "run_id", "docs_in", "docs_quality_kept", "docs_curated", "drop_reasons",
+        "lines_in", "lines_kept", "docs_near_dropped", "span_words_in",
+        "span_words_kept", "docs_contaminated",
+    ]
+    # every stage fired: lines and spans removed, contaminated docs dropped
+    # with their audit reason, and every survivor went through the near stage
+    assert stats["lines_kept"] < stats["lines_in"]
+    assert stats["span_words_kept"] < stats["span_words_in"]
+    assert stats["docs_contaminated"] > 0
+    assert stats["drop_reasons"]["contaminated"] == stats["docs_contaminated"]
+    assert dec.filter(F.col("survivor") & F.col("near_rep").isNull()).count() == 0
+    assert spark.read.parquet(f"{out}/curated").count() == stats["docs_curated"]

@@ -239,3 +239,32 @@ def test_warc_parser_totality_property():
                 pass
 
     run()
+
+
+def test_cdx_cli_stats_match_table(spark, tmp_path):
+    """jobs.py --job cdx through the real CLI in a subprocess (jobs.main
+    stops its session): the stats line counts the written index — rows
+    and distinct archive files."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    warc_dir, _ = W.warc_fixture(40)
+    out = str(tmp_path / "cdx")
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "ocr_machine_spark/jobs.py", "--job", "cdx",
+         "--input", warc_dir, "--output", out, "--run-id", "x1",
+         "--master", "local[4]"],
+        capture_output=True, text=True, cwd=repo_root, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    stats = json.loads(res.stdout.strip().splitlines()[-1])
+    table = spark.read.parquet(out)
+    assert stats == {
+        "run_id": "x1",
+        "n_records": table.count(),
+        "n_files": table.select("file").distinct().count(),
+    }
+    assert stats["n_records"] == 40 and stats["n_files"] == 2
